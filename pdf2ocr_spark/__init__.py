@@ -9,7 +9,8 @@ rebuilt Spark-first:
 - per-document OCR-text recovery, reading-order paragraph reconstruction,
   header/footer boilerplate stripping, and multi-format span emission
   (text / markdown / html / docx_para / page_header / media_ref), all as
-  vectorized Arrow stages (``mapInPandas`` — no per-row Python UDFs)
+  vectorized Arrow stages (``mapInArrow`` for the extraction kernels,
+  ``mapInPandas`` for docgen/media/OCR — no per-row Python UDFs)
 - per-partition lineage + checkpoint/resume
 - training-data-pipeline operators (dedup, similarity search, text
   quality) as declarative DataFrame transforms
@@ -22,4 +23,10 @@ Layout:
     streaming/  incremental ingest via Structured Streaming
 """
 
+from pdf2ocr_spark.worker_imports import install_lazy_zip_invalidation
+
 __version__ = "0.1.0"
+
+# Spark Python workers import this package when they unpickle an engine
+# UDF; from then on each task skips re-reading unchanged pyspark.zip.
+install_lazy_zip_invalidation()

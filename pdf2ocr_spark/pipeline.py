@@ -102,7 +102,7 @@ def run_pipeline(
     """documents.parquet -> stripe -> docs -> spans_out DataFrame (lazy).
 
     Physical plan: parquet scan -> ONE small-row shuffle (weight-striped)
-    -> fused docgen+extract mapInPandas stages (no nested-data shuffle).
+    -> fused docgen+extract mapInArrow stage (no nested-data shuffle).
     """
     from pdf2ocr_spark.operators.extract import documents_to_spans
 

@@ -12,7 +12,8 @@ import os
 from pyspark.sql import SparkSession
 
 ENGINE_CONFS = {
-    # Arrow end-to-end: the kernel stages are mapInPandas/applyInPandas
+    # Arrow end-to-end: the extraction kernels are mapInArrow, the
+    # docgen/media/OCR stages mapInPandas
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # 128-row batches measured fastest for the extraction kernel (finer
     # JVM<->Python pipelining; 256/512/1024 were 15-35% slower end-to-end)
@@ -36,6 +37,11 @@ ENGINE_CONFS = {
     # Explicitly setting the thresholds disables the dynamic cap.
     "spark.executorEnv.MALLOC_MMAP_THRESHOLD_": "1073741824",
     "spark.executorEnv.MALLOC_TRIM_THRESHOLD_": "268435456",
+    # The other fixed cost of every Python task is worker set-up, not a
+    # conf: pyspark invalidates the import caches per task, and before
+    # Python 3.13 that re-parses pyspark.zip's directory once per
+    # imported subpackage (~0.1-0.2 s/task). The package __init__ makes
+    # that lazy in the workers (pdf2ocr_spark/worker_imports.py).
     # keep driver-side results reasonable during tests
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",

@@ -1,6 +1,12 @@
 import pytest
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: launches its own Spark JVM (spark-submit, standalone cluster)"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pdf2ocr_spark.session import get_spark

@@ -93,3 +93,55 @@ def test_parity_vs_pure_kernel(spark, sf_dir, docs_df):
     )
     local["offset"] = local["offset"].astype(spark_out["offset"].dtype)
     pd.testing.assert_frame_equal(spark_out, local)
+
+
+def test_workers_use_lazy_zip_invalidation(spark, docs_df):
+    """Every Python worker that ran an engine kernel has the lazy zip-cache
+    invalidation installed (pdf2ocr_spark.worker_imports), so reused
+    workers stop re-reading pyspark.zip's directory on every task."""
+    from pdf2ocr_spark.operators.extract import extract_spans_arrow
+
+    assert extract_spans_arrow(docs_df).count() > 0
+
+    # Nested, so it is pickled by value and imports nothing of the engine:
+    # pdf2ocr_spark in sys.modules means this worker ran an engine task.
+    def probe(batches):
+        import os
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        lazy = sys.modules.get("pdf2ocr_spark.worker_imports")
+        yield pa.RecordBatch.from_pydict({
+            "pid": [os.getpid()],
+            "engine": ["pdf2ocr_spark" in sys.modules],
+            "installed": [
+                lazy is not None
+                and zipimport.zipimporter.invalidate_caches
+                is lazy._lazy_invalidate_caches
+            ],
+            "zip_imports": [
+                any(isinstance(f, zipimport.zipimporter)
+                    for f in sys.path_importer_cache.values())
+            ],
+            "stamped": [lazy is not None and bool(lazy._read_stamps)],
+        })
+
+    rows = (
+        spark.range(0, 16, numPartitions=16)
+        .mapInArrow(
+            probe,
+            "pid long, engine boolean, installed boolean, "
+            "zip_imports boolean, stamped boolean",
+        )
+        .collect()
+    )
+    engine_rows = [r for r in rows if r["engine"]]
+    assert engine_rows, f"no probe task landed on a reused engine worker: {rows}"
+    for r in engine_rows:
+        assert r["installed"], f"worker {r['pid']} ran the engine unpatched"
+        # the probe task's own set-up went through the lazy path
+        assert r["stamped"] or not r["zip_imports"]
