@@ -36,7 +36,7 @@ happens ACROSS documents in the Arrow batch stage that calls this.
 from __future__ import annotations
 
 import re
-from typing import Iterator, List, Optional, Sequence, Tuple
+from typing import List, Optional, Sequence, Tuple
 
 from pdf2ocr_spark.kernel.textproc import (
     _looks_like_heading,
@@ -242,14 +242,3 @@ def extract_from_pages(
         n += 1
 
     return rows
-
-
-def extract_documents(
-    docs: Iterator[Tuple[str, Sequence[dict]]],
-    formats: Sequence[str] = ALL_FORMATS,
-    lang: str = "eng",
-    max_sentences: Optional[int] = None,
-) -> Iterator[SpanRow]:
-    """Batch driver: yield span rows for many documents."""
-    for doc_id, spans in docs:
-        yield from extract_document(doc_id, spans, formats, lang, max_sentences)

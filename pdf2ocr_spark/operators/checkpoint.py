@@ -4,11 +4,14 @@ The reference CLI has NO resume — a killed run redoes everything
 (/root/reference/pdf2ocr/converters/pdf.py:919-927 only stops scheduling).
 This engine checkpoints at partition granularity (north rule):
 
-- every document gets a STABLE partition id (``part_id``) from the same
-  weight-striped expression as ``skew_balanced`` — deterministic across
-  runs and cluster sizes, so a resume sees the identical doc->partition map;
-- the fused kernel emits, per Spark task, one sentinel '_lineage' row with
-  real in-kernel metrics (doc/page/span counts, wall time, per-doc errors);
+- every document gets a STABLE partition id (``part_id``) from
+  ``pipeline.stable_part_id``, the weight-striped key ``skew_balanced``
+  repartitions by — deterministic across runs and cluster sizes, so a
+  resume sees the identical doc->partition map;
+- the extraction kernel (``operators.extract.span_kernel`` with its lineage
+  sink on) emits, per Spark task, one sentinel '_lineage' row per part_id
+  with real in-kernel metrics (doc/page/span counts, wall time, per-doc
+  errors);
 - spans and lineage are both written ``partitionBy(part_id)`` with dynamic
   partition overwrite, so re-processing a partition is idempotent
   (overwrite-by-partition, never append);
@@ -23,29 +26,31 @@ lineage error list and the job continues.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 from typing import Iterator, Optional, Sequence
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from pdf2ocr_spark.kernel.emit import ALL_FORMATS, extract_document
+from pdf2ocr_spark.kernel.emit import ALL_FORMATS
+from pdf2ocr_spark.operators.extract import (
+    LINEAGE_KIND,
+    decode_nested,
+    decode_text,
+    span_kernel,
+)
+from pdf2ocr_spark.pipeline import stable_part_id
+from pdf2ocr_spark.schema import DOCS_SCHEMA, SPANS_OUT_SCHEMA
 
-LINEAGE_KIND = "_lineage"
-
+#: spans_out + part_id; lineage sentinel rows have a null doc_id
 CHECKPOINT_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("offset", T.IntegerType()),
-        T.StructField("part_id", T.IntegerType()),
-    ]
+    [T.StructField(f.name, f.dataType) for f in SPANS_OUT_SCHEMA]
+    + [T.StructField("part_id", T.IntegerType())]
 )
 
 LINEAGE_JSON_SCHEMA = T.StructType(
@@ -67,164 +72,25 @@ LINEAGE_JSON_SCHEMA = T.StructType(
 )
 
 
-def stable_part_id(num_partitions: int):
-    """Deterministic weight-striped partition id (must match
-    operators/extract.py:skew_balanced so bench and checkpoint agree)."""
-    wclass = F.floor(F.log2(F.greatest(F.size("spans"), F.lit(1)) + 1))
-    return F.pmod(
-        F.xxhash64(F.col("doc_id"), wclass.cast("long")), F.lit(num_partitions)
-    ).cast("int")
-
-
 def _kernel(formats: Sequence[str], lang: str, max_sentences: Optional[int]):
-    fmts = tuple(formats)
+    """``mapInPandas`` form of the nested-mode lineage kernel over
+    ``(doc_id, spans, part_id)`` rows: each pandas batch goes through the
+    same Arrow kernel (``span_kernel`` + ``decode_nested``) that
+    ``run_checkpointed`` runs with ``mapInArrow``."""
+    run = span_kernel(decode_nested, formats, lang, max_sentences, part_mode="nested")
+    schema = to_arrow_schema(
+        T.StructType(DOCS_SCHEMA.fields + [T.StructField("part_id", T.IntegerType())])
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "kind", "text", "media_ref", "offset", "part_id"]
-        # one Spark task can carry several part_id values (value-hash
-        # collisions in repartition), so metrics are bucketed per part_id
-        stats: dict[int, dict] = {}
-        for pdf in batches:
-            rows = []
-            for doc_id, spans, pid in zip(pdf["doc_id"], pdf["spans"], pdf["part_id"]):
-                pid = int(pid)
-                st = stats.setdefault(
-                    pid,
-                    {"docs": 0, "pages": 0, "spans": 0, "wall": 0.0, "errors": []},
-                )
-                st["docs"] += 1
-                st["pages"] += sum(1 for s in spans if s.get("kind") == "page")
-                t0 = time.monotonic()
-                try:
-                    out = extract_document(doc_id, spans, fmts, lang, max_sentences)
-                except Exception as exc:  # reference-style per-doc isolation
-                    st["errors"].append(f"{doc_id}: {exc}")
-                    st["wall"] += time.monotonic() - t0
-                    continue
-                st["wall"] += time.monotonic() - t0
-                st["spans"] += len(out)
-                rows.extend((*r, pid) for r in out)
-            yield pd.DataFrame(rows, columns=cols)
-        if stats:
-            sentinels = []
-            for pid, st in sorted(stats.items()):
-                payload = json.dumps(
-                    {
-                        "doc_count": st["docs"],
-                        "page_count": st["pages"],
-                        "span_count": st["spans"],
-                        "wall_sec": round(st["wall"], 4),
-                        "docs_per_sec": (
-                            round(st["docs"] / st["wall"], 3) if st["wall"] > 0 else None
-                        ),
-                        "status": "success",
-                        "errors": st["errors"],
-                        "part_mode": "nested",
-                    }
-                )
-                sentinels.append([None, LINEAGE_KIND, payload, None, 0, pid])
-            yield pd.DataFrame(sentinels, columns=cols)
-
-    return run
-
-
-def _kernel_fused(formats: Sequence[str], lang: str, max_sentences: Optional[int]):
-    """Channel + extract in ONE Python pass over the SMALL text rows.
-
-    The two-stage form (documents -> channel mapInPandas -> nested docs
-    -> repartition(part_id) -> extract mapInPandas) shuffles the full
-    nested span relation between the stages and pays a second
-    nested-Arrow round trip; fused, the only shuffle in the whole job is
-    the caller's ~100-byte-row repartition by the text-predicted
-    part_id (pipeline.stripe_key), and the nested spans live only inside
-    one Python worker. Runs as ``mapInArrow`` and emits RecordBatches
-    directly: the span-heavy OUTPUT relation (~36 rows/doc) through
-    pandas costs a per-row tuple -> DataFrame -> Arrow conversion that
-    measured ~4-5x the kernel (same finding as extract_spans_arrow,
-    operators/extract.py). Lineage metrics are identical to _kernel
-    (pages counted from the spans the channel just built; wall covers
-    channel+extract — the work this kernel actually does)."""
-    import pyarrow as pa
-
-    from pdf2ocr_spark.kernel.docgen import build_spans
-
-    fmts = tuple(formats)
-    names = ["doc_id", "kind", "text", "media_ref", "offset", "part_id"]
-
-    def _batch(doc, kind, text, ref, off, pid):
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.array(doc, pa.string()),
-                pa.array(kind, pa.string()),
-                pa.array(text, pa.string()),
-                pa.array(ref, pa.string()),
-                pa.array(off, pa.int32()),
-                pa.array(pid, pa.int32()),
-            ],
-            names=names,
+    def run_pandas(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        arrow = (
+            pa.RecordBatch.from_pandas(pdf, schema=schema, preserve_index=False)
+            for pdf in batches
         )
+        for out in run(arrow):
+            yield out.to_pandas()
 
-    def run(batches):
-        stats: dict[int, dict] = {}
-        for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            texts = batch.column("text").to_pylist()
-            sources = batch.column("source").to_pylist()
-            pids = batch.column("part_id").to_pylist()
-            o_doc, o_kind, o_text, o_ref, o_off, o_pid = [], [], [], [], [], []
-            for doc_id, text, source, pid in zip(doc_ids, texts, sources, pids):
-                pid = int(pid)
-                did = str(doc_id)
-                st = stats.setdefault(
-                    pid,
-                    {"docs": 0, "pages": 0, "spans": 0, "wall": 0.0, "errors": []},
-                )
-                st["docs"] += 1
-                t0 = time.monotonic()
-                try:
-                    spans = build_spans(did, text, source)
-                    st["pages"] += sum(1 for s in spans if s.get("kind") == "page")
-                    out = extract_document(did, spans, fmts, lang, max_sentences)
-                except Exception as exc:  # reference-style per-doc isolation
-                    st["errors"].append(f"{did}: {exc}")
-                    st["wall"] += time.monotonic() - t0
-                    continue
-                st["wall"] += time.monotonic() - t0
-                st["spans"] += len(out)
-                for r in out:
-                    o_doc.append(r[0])
-                    o_kind.append(r[1])
-                    o_text.append(r[2])
-                    o_ref.append(r[3])
-                    o_off.append(r[4])
-                    o_pid.append(pid)
-            yield _batch(o_doc, o_kind, o_text, o_ref, o_off, o_pid)
-        if stats:
-            s_doc, s_kind, s_text, s_ref, s_off, s_pid = [], [], [], [], [], []
-            for pid, st in sorted(stats.items()):
-                payload = json.dumps(
-                    {
-                        "doc_count": st["docs"],
-                        "page_count": st["pages"],
-                        "span_count": st["spans"],
-                        "wall_sec": round(st["wall"], 4),
-                        "docs_per_sec": (
-                            round(st["docs"] / st["wall"], 3) if st["wall"] > 0 else None
-                        ),
-                        "status": "success",
-                        "errors": st["errors"],
-                        "part_mode": "fused",
-                    }
-                )
-                s_doc.append(None)
-                s_kind.append(LINEAGE_KIND)
-                s_text.append(payload)
-                s_ref.append(None)
-                s_off.append(0)
-                s_pid.append(pid)
-            yield _batch(s_doc, s_kind, s_text, s_ref, s_off, s_pid)
-
-    return run
+    return run_pandas
 
 
 def _completed_partitions(
@@ -339,15 +205,16 @@ def run_checkpointed(
     # part_id — repeating it here would put a second (elided or worse,
     # real) exchange in the plan.
     if fused_channel:
-        out = tagged.select("doc_id", "text", "source", "part_id").mapInArrow(
-            _kernel_fused(formats, lang, max_sentences),
-            schema=CHECKPOINT_OUT_SCHEMA,
-        )
+        cols = tagged.select("doc_id", "text", "source", "part_id")
+        decode = decode_text
     else:
         shuffled = tagged.repartition(num_partitions, "part_id")
-        out = shuffled.select("doc_id", "spans", "part_id").mapInPandas(
-            _kernel(formats, lang, max_sentences), schema=CHECKPOINT_OUT_SCHEMA
-        )
+        cols = shuffled.select("doc_id", "spans", "part_id")
+        decode = decode_nested
+    out = cols.mapInArrow(
+        span_kernel(decode, formats, lang, max_sentences, part_mode=mode),
+        schema=CHECKPOINT_OUT_SCHEMA,
+    )
     t_write0 = time.monotonic()
     out.write.mode("overwrite").partitionBy("part_id").parquet(
         os.path.join(output_dir, "combined")

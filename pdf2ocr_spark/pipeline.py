@@ -12,7 +12,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pdf2ocr_spark.kernel.emit import ALL_FORMATS
 from pdf2ocr_spark.operators.docgen import documents_to_docs
-from pdf2ocr_spark.operators.extract import extract_spans
 
 
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -44,6 +43,18 @@ def load_docs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The engine's input relation, derived deterministically from the
     driver-provided documents table (kernel/docgen.py channel model)."""
     return documents_to_docs(load_documents(spark, sf_dir))
+
+
+def stable_part_id(num_partitions: int):
+    """Deterministic weight-striped partition key on the NESTED docs
+    relation (hash of doc_id and log2 span-count class). Not interchangeable
+    with ``stripe_key``: the two put different documents in each part_id."""
+    from pyspark.sql import functions as F
+
+    wclass = F.floor(F.log2(F.greatest(F.size("spans"), F.lit(1)) + 1))
+    return F.pmod(
+        F.xxhash64(F.col("doc_id"), wclass.cast("long")), F.lit(num_partitions)
+    ).cast("int")
 
 
 def stripe_key(num_partitions: int):

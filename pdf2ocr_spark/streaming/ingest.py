@@ -22,8 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from pdf2ocr_spark.kernel.emit import ALL_FORMATS
-from pdf2ocr_spark.operators.docgen import documents_to_docs
-from pdf2ocr_spark.operators.extract import extract_spans
+from pdf2ocr_spark.operators.extract import documents_to_spans
 
 DOCUMENTS_SCHEMA = T.StructType(
     [
@@ -42,10 +41,9 @@ def _stream_pipeline(
     lang: str,
     max_sentences: Optional[int],
 ) -> DataFrame:
-    docs = documents_to_docs(stream)
-    return extract_spans(
-        docs, formats=formats, lang=lang, max_sentences=max_sentences,
-        num_partitions=None,  # streaming micro-batches are already file-split
+    # no repartition: streaming micro-batches are already file-split
+    return documents_to_spans(
+        stream, formats=formats, lang=lang, max_sentences=max_sentences
     )
 
 

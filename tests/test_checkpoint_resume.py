@@ -182,6 +182,7 @@ def test_fused_channel_matches_two_stage(spark, docs, sf_dir, outdir):
     try:
         run_checkpointed(spark, docs, two_stage_dir, num_partitions=N_PARTS)
         two_stage = read_spans(spark, two_stage_dir).toPandas()
+        two_stage_lin = read_lineage(spark, two_stage_dir).toPandas()
     finally:
         shutil.rmtree(two_stage_dir, ignore_errors=True)
     pd.testing.assert_frame_equal(canon(fused), canon(two_stage))
@@ -190,6 +191,14 @@ def test_fused_channel_matches_two_stage(spark, docs, sf_dir, outdir):
     lin = read_lineage(spark, outdir).toPandas()
     assert lin["doc_count"].sum() == small.count()
     assert (lin["status"] == "success").all()
+    # the two modes partition differently but count the same work
+    for col in ("doc_count", "page_count", "span_count"):
+        assert lin[col].sum() == two_stage_lin[col].sum(), col
+    assert lin["span_count"].sum() == len(fused)
+    n_pages = docs.select(
+        F.expr("size(filter(spans, s -> s.kind = 'page'))").alias("n")
+    ).agg(F.sum("n")).first()[0]
+    assert lin["page_count"].sum() == n_pages
 
 
 def test_fused_channel_resume_is_noop_and_requires_part_id(spark, sf_dir, outdir):
@@ -237,3 +246,44 @@ def test_resume_refuses_partition_mode_mismatch(spark, docs, sf_dir, outdir):
         resume=False,
     )
     assert res["processed"] > 0
+
+
+def test_pandas_kernel_matches_nested_checkpoint(spark, docs, outdir):
+    """bench.py's skew_spread runs ``_kernel`` under mapInPandas over the
+    stable_part_id-striped docs: it must emit the same spans and the same
+    per-partition lineage counts as run_checkpointed's nested mode."""
+    import pandas as pd
+
+    from pdf2ocr_spark.operators.checkpoint import (
+        CHECKPOINT_OUT_SCHEMA,
+        LINEAGE_JSON_SCHEMA,
+        LINEAGE_KIND,
+        _kernel,
+    )
+
+    fmts = ("text", "markdown")
+    out = (
+        docs.withColumn("part_id", stable_part_id(N_PARTS))
+        .repartition(N_PARTS, "part_id")
+        .select("doc_id", "spans", "part_id")
+        .mapInPandas(_kernel(fmts, "eng", None), schema=CHECKPOINT_OUT_SCHEMA)
+    )
+    spans = out.where(F.col("kind") != LINEAGE_KIND).drop("part_id").toPandas()
+    counts = ["part_id", "doc_count", "page_count", "span_count"]
+    lin = (
+        out.where(F.col("kind") == LINEAGE_KIND)
+        .select("part_id", F.from_json("text", LINEAGE_JSON_SCHEMA).alias("m"))
+        .select("part_id", "m.*")
+        .toPandas()
+    )
+    assert (lin["part_mode"] == "nested").all()
+    assert lin["errors"].map(len).sum() == 0
+
+    run_checkpointed(spark, docs, outdir, num_partitions=N_PARTS, formats=fmts)
+    ckpt_spans = read_spans(spark, outdir).toPandas()
+    pd.testing.assert_frame_equal(canon(spans), canon(ckpt_spans))
+    ckpt_lin = read_lineage(spark, outdir).toPandas()
+    pd.testing.assert_frame_equal(
+        lin[counts].sort_values("part_id").reset_index(drop=True),
+        ckpt_lin[counts].sort_values("part_id").reset_index(drop=True),
+    )

@@ -56,20 +56,73 @@ def test_partitioning_invariance(spark, sf_dir):
     pd.testing.assert_frame_equal(a, b)
 
 
-def test_arrow_path_matches_pandas_path(spark, docs_df):
-    """extract_spans (mapInPandas) and extract_spans_arrow (mapInArrow
-    columnar fast path) must emit identical span sets."""
-    from pdf2ocr_spark.operators.extract import extract_spans, extract_spans_arrow
+@pytest.mark.parametrize(
+    "kwargs",
+    [{}, {"formats": ("layout_text",)}, {"lang": "por"}, {"max_sentences": 2}],
+    ids=["default", "layout_text", "por", "max_sentences"],
+)
+def test_extract_spans_matches_kernel(docs_df, kwargs):
+    """extract_spans (the Arrow kernel over nested docs) emits, per
+    document, exactly kernel.emit.extract_document's rows."""
+    from pdf2ocr_spark.operators.extract import extract_spans
 
     key = ["doc_id", "kind", "offset"]
-    a = extract_spans(docs_df).toPandas().sort_values(key).reset_index(drop=True)
-    b = (
-        extract_spans_arrow(docs_df)
-        .toPandas()
-        .sort_values(key)
-        .reset_index(drop=True)
+    got = extract_spans(docs_df, **kwargs).toPandas()
+    rows = []
+    for r in docs_df.collect():
+        spans = [s.asDict() for s in r["spans"]]
+        rows.extend(extract_document(r["doc_id"], spans, **kwargs))
+    want = pd.DataFrame(rows, columns=["doc_id", "kind", "text", "media_ref", "offset"])
+    want["offset"] = want["offset"].astype(got["offset"].dtype)
+    pd.testing.assert_frame_equal(
+        got.sort_values(key).reset_index(drop=True),
+        want.sort_values(key).reset_index(drop=True),
     )
-    pd.testing.assert_frame_equal(a, b)
+
+
+def test_extract_spans_refuses_null_offset(spark):
+    """A span whose offset is null cannot be ordered: the document is
+    refused with an error naming it, not emitted in an arbitrary order."""
+    from pdf2ocr_spark.operators.extract import extract_spans
+    from pdf2ocr_spark.schema import DOCS_SCHEMA
+
+    docs = spark.createDataFrame(
+        [("null-offset-doc", [
+            {"kind": "page", "text": "Second.", "media_ref": None, "offset": 1},
+            {"kind": "page", "text": "Null.", "media_ref": None, "offset": None},
+            {"kind": "page", "text": "First.", "media_ref": None, "offset": 0},
+        ])],
+        schema=DOCS_SCHEMA,
+    )
+    with pytest.raises(Exception, match="null-offset-doc.*null offset"):
+        extract_spans(docs).collect()
+
+
+def test_nested_decoder_reads_sliced_batches():
+    """The nested decoder indexes the span ListArray by its absolute
+    offsets, so a batch sliced out of a larger array (non-zero first
+    offset) decodes the right spans for each document."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from pdf2ocr_spark.kernel.emit import ALL_FORMATS
+    from pdf2ocr_spark.operators.extract import decode_nested, span_kernel
+    from pdf2ocr_spark.schema import DOCS_SCHEMA
+
+    docs = [
+        (str(d), build_spans(str(d), f"Words of document {d}. " * (10 + 5 * d), "Src"))
+        for d in range(7)
+    ]
+    table = pa.Table.from_pydict(
+        {"doc_id": [d for d, _ in docs], "spans": [s for _, s in docs]},
+        schema=to_arrow_schema(DOCS_SCHEMA),
+    )
+    batches = table.to_batches(max_chunksize=3)
+    assert batches[1].column("spans").offsets[0].as_py() > 0
+    run = span_kernel(decode_nested, ALL_FORMATS, "eng", None)
+    got = pa.Table.from_batches(list(run(iter(batches)))).to_pylist()
+    want = [r for d, s in docs for r in extract_document(d, s)]
+    assert [tuple(r.values()) for r in got] == want
 
 
 def test_parity_vs_pure_kernel(spark, sf_dir, docs_df):
